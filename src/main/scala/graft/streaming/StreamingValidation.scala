@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -49,6 +49,8 @@ object StreamingValidation {
     * could surface a half-written batch). Idempotent on micro-batch replay:
     * a batch id already in the chain is skipped, so foreachBatch's
     * at-least-once re-delivery after restart stays exactly-once-visible.
+    * An empty batch (the 400 analog: nothing to produce) commits nothing
+    * and returns None.
     */
   def processAndCommit(
       log: SnapshotLog,
@@ -62,74 +64,10 @@ object StreamingValidation {
     // recreated checkpoint dir restarts batch ids at 0 — give it a new
     // checkpointId and its batches commit instead of aliasing old ones.
     if (head.exists(m => log.committedStreamBatches(m, checkpointId).contains(batchId))) return None
-    if (batch.isEmpty) return None // empty body -> 400 analog: nothing to produce
-
-    val spark = batch.sparkSession
     val snapshotId = s"batch-$batchId"
     val res = new ValidationEngine(cs, EngineOptions(snapshotId = snapshotId)).process(batch)
-    val tag = s"stream-$checkpointId-$batchId"
-    val annotatedPath = log.dataDir(tag, "annotated")
-    val vioPath = log.dataDir(tag, "violations")
-    val rollPath = log.dataDir(tag, "rollups")
-
-    // ONE pass over the micro-batch (the batch job's produce shape): the
-    // annotated frame is written routed by statusd (status stays a data
-    // column) with batch totals observed during the same job; rollups and
-    // violations derive from the written table, not a pipeline re-run.
-    val annFrame = res.annotated.drop("_decode")
-    val (nS, nI, nE) =
-      SnapshotLog.writeAnnotated(annFrame, annotatedPath, s"sv_$tag")
-
-    // nonempty: batch.isEmpty guarded above; known file schema: no footer sampling
-    val ann = log.readPaths(spark, Seq(annotatedPath), Some(annFrame.schema))
-    val rollups = ann
-      .groupBy(col("partition_id"))
-      .agg(
-        count(when(col("status") === graft.model.Status.Success, 1)).as("n_success"),
-        count(when(col("status") === graft.model.Status.Invalid, 1)).as("n_invalid"),
-        count(when(col("status") === graft.model.Status.Error, 1)).as("n_error")
-      )
-      .select(lit(snapshotId).as("snapshot_id"), col("partition_id"),
-        col("n_success"), col("n_invalid"), col("n_error"))
-    rollups.coalesce(1).write.mode("overwrite").parquet(rollPath)
-
-    val failingDirs = SnapshotLog.failingDirs(annotatedPath, nI, nE)
-    val vio =
-      if (failingDirs.isEmpty)
-        spark.createDataFrame(
-          java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-          ValidationEngine.violationRowSchema)
-      else
-        ValidationEngine.violationRows(log.readPaths(spark, failingDirs, Some(annFrame.schema)), snapshotId, "image_id")
-    vio.write.mode("overwrite").parquet(vioPath)
-
-    val validPaths =
-      if (nS > 0) Seq(SnapshotLog.validDir(annotatedPath)) else Seq.empty[String]
-    val prev = head.map(_.metrics).getOrElse(Map.empty)
-    Some(log.commit(Manifest(
-      snapshotId = "",
-      sequence = 0L,
-      parentId = head.map(_.snapshotId),
-      constraintVersion = cs.version,
-      partitionSpec = "stream-batch",
-      partitionsDelta = Seq.empty,
-      complete = false, // a stream is never complete
-      tables = Map(
-        "valid" -> validPaths,
-        "annotated" -> Seq(annotatedPath),
-        "violations" -> Seq(vioPath), // empty unpartitioned writes still leave a schema-bearing file
-        "rollups" -> Seq(rollPath)
-      ),
-      tableSchemas = SnapshotLog.tableSchemasFor(annFrame.schema, vio.schema, rollups.schema),
-      metrics = Map(
-        "n_success" -> (prev.getOrElse("n_success", 0L) + nS),
-        "n_invalid" -> (prev.getOrElse("n_invalid", 0L) + nI),
-        "n_error" -> (prev.getOrElse("n_error", 0L) + nE)
-      ),
-      sketches = head.map(_.sketches).getOrElse(Map.empty),
-      createdAtMs = System.currentTimeMillis(),
-      streamBatches = Map(checkpointId -> Seq(batchId))
-    )))
+    produceAndCommit(log, head, res.annotated.drop("_decode"), None, cs.version, batchId, checkpointId,
+      Some(ValidationEngine.violationRowSchema))(ValidationEngine.violationRows(_, snapshotId, "image_id"))
   }
 
   /** Snapshot-committed MULTI-STREAM micro-batch gate — the closest analog
@@ -138,8 +76,8 @@ object StreamingValidation {
     * produced to its stream's destination
     * (/root/reference/lib/factories/default-eventgate.js:132-152 routing +
     * :242-278 per-topic produce), with each micro-batch's fan-out made
-    * atomic through one manifest. Idempotent on replay like
-    * [[processAndCommit]].
+    * atomic through one manifest. Idempotent on replay, and empty batches
+    * commit nothing, like [[processAndCommit]].
     */
   def processAndCommitMultiStream(
       log: graft.table.SnapshotLog,
@@ -152,57 +90,84 @@ object StreamingValidation {
   ): Option[Manifest] = {
     val head = log.head
     if (head.exists(m => log.committedStreamBatches(m, checkpointId).contains(batchId))) return None
-    if (batch.isEmpty) return None // empty body -> 400 analog: nothing to produce
-
-    val spark = batch.sparkSession
     val snapshotId = s"batch-$batchId"
     val res = new graft.engine.MultiStreamEngine(
       registry,
       EngineOptions(snapshotId = snapshotId, idField = idField),
       streamCol
     ).process(batch)
+    val version = registry.sets.map(_.version).sorted.mkString(",")
+    produceAndCommit(log, head, res.annotated, Some(streamCol), version, batchId, checkpointId, None)(
+      graft.engine.MultiStreamEngine.violationRows(_, snapshotId, idField, streamCol))
+  }
+
+  /** The produce half both stream gates share, in 2 Spark jobs (a caller's
+    * own input planning aside):
+    *  1. ONE pass writes `annotated` routed by statusd (and streamd) while
+    *     an Observation counts success/invalid/error per (stream,
+    *     partition_id) in the same job ([[SnapshotLog.writeAnnotated]]).
+    *     Zero observed rows means an empty batch: its uncommitted data
+    *     directory is deleted and nothing commits. Emptiness is read from
+    *     these totals, so it costs no Spark job of its own.
+    *  2. The rollup rows ARE those counts, written by the driver as one
+    *     parquet file ([[SnapshotLog.writeRollups]]) — no re-read of the
+    *     written table, no Spark job.
+    *  3. Violations derive from the written failing slice only. When no
+    *     row failed, `emptyViolations` (if set) is the schema of the empty
+    *     violations file; otherwise `violations` runs over an empty read.
+    *     Then one manifest commit.
+    */
+  private def produceAndCommit(
+      log: SnapshotLog,
+      head: Option[Manifest],
+      annotated: DataFrame,
+      streamCol: Option[String],
+      constraintVersion: String,
+      batchId: Long,
+      checkpointId: String,
+      emptyViolations: Option[StructType]
+  )(violations: DataFrame => DataFrame): Option[Manifest] = {
+    val spark = annotated.sparkSession
     val tag = s"stream-$checkpointId-$batchId"
     val annotatedPath = log.dataDir(tag, "annotated")
     val vioPath = log.dataDir(tag, "violations")
     val rollPath = log.dataDir(tag, "rollups")
-    // ONE pass: annotated written routed per (statusd, streamd) with batch
-    // totals observed during the write; rollups and violations derive from
-    // the written table (explicit failing-directory reads).
-    val (nS, nI, nE) =
-      SnapshotLog.writeAnnotated(res.annotated, annotatedPath, s"svm_$tag", Some(streamCol))
-    val ann = log.readPaths(spark, Seq(annotatedPath), Some(res.annotated.schema))
-    val rollups = ann
-      .groupBy(col(streamCol).as("stream"), col("partition_id"))
-      .agg(
-        count(when(col("status") === graft.model.Status.Success, 1)).as("n_success"),
-        count(when(col("status") === graft.model.Status.Invalid, 1)).as("n_invalid"),
-        count(when(col("status") === graft.model.Status.Error, 1)).as("n_error")
-      )
-      .select(lit(snapshotId).as("snapshot_id"), col("stream"), col("partition_id"),
-        col("n_success"), col("n_invalid"), col("n_error"))
-    rollups.coalesce(1).write.mode("overwrite").parquet(rollPath)
+
+    val counts = SnapshotLog.writeAnnotated(annotated, annotatedPath, s"sv_$tag", streamCol)
+    val (nS, nI, nE) = SnapshotLog.totals(counts)
+    if (nS + nI + nE == 0) { // empty body -> 400 analog: nothing to produce
+      log.discardData(tag)
+      return None
+    }
+    val rollupSchema = log.writeRollups(rollPath, s"batch-$batchId", counts, withStream = streamCol.isDefined)
+
+    // known file schema: no footer sampling
+    def written(dirs: Seq[String]) = log.readPaths(spark, dirs, Some(annotated.schema))
     val failingDirs = SnapshotLog.failingDirs(annotatedPath, nI, nE)
-    val failing =
-      if (failingDirs.isEmpty) ann.limit(0)
-      else log.readPaths(spark, failingDirs, Some(res.annotated.schema))
-    val vio = graft.engine.MultiStreamEngine.violationRows(failing, snapshotId, idField, streamCol)
+    val vio =
+      if (failingDirs.nonEmpty) violations(written(failingDirs))
+      else emptyViolations.fold(violations(written(Seq(annotatedPath)).limit(0)))(
+        spark.createDataFrame(java.util.Collections.emptyList[Row](), _))
     vio.write.mode("overwrite").parquet(vioPath)
+
+    val validPaths =
+      if (nS > 0) Seq(SnapshotLog.validDir(annotatedPath)) else Seq.empty[String]
     val prev = head.map(_.metrics).getOrElse(Map.empty)
     Some(log.commit(Manifest(
       snapshotId = "",
       sequence = 0L,
       parentId = head.map(_.snapshotId),
-      constraintVersion = registry.sets.map(_.version).sorted.mkString(","),
+      constraintVersion = constraintVersion,
       partitionSpec = "stream-batch",
       partitionsDelta = Seq.empty,
-      complete = false,
+      complete = false, // a stream is never complete
       tables = Map(
-        "valid" -> (if (nS > 0) Seq(SnapshotLog.validDir(annotatedPath)) else Seq.empty),
+        "valid" -> validPaths,
         "annotated" -> Seq(annotatedPath),
         "violations" -> Seq(vioPath), // empty unpartitioned writes still leave a schema-bearing file
         "rollups" -> Seq(rollPath)
       ),
-      tableSchemas = SnapshotLog.tableSchemasFor(res.annotated.schema, vio.schema, rollups.schema),
+      tableSchemas = SnapshotLog.tableSchemasFor(annotated.schema, vio.schema, rollupSchema),
       metrics = Map(
         "n_success" -> (prev.getOrElse("n_success", 0L) + nS),
         "n_invalid" -> (prev.getOrElse("n_invalid", 0L) + nI),

@@ -19,12 +19,10 @@ import graft.model.Status
   *  1. ONE full pass writes the annotated frame routed by
   *     (statusd, streamd) directories — the valid table is the
   *     statusd=success subtree, already laid out one directory per
-  *     stream — while an attached Observation collects the batch's status
-  *     totals during the same job.
-  *  2. Rollups per (stream, partition) aggregate over the WRITTEN annotated
-  *     table — a columnar re-read of three narrow columns, the only
-  *     post-write pass (per-(stream,partition) counts are
-  *     stream-value-dependent, so a global Observation can't carry them).
+  *     stream — while an attached Observation counts statuses per
+  *     (stream, partition) during the same job.
+  *  2. Those counts are the rollups, written by the driver as one parquet
+  *     file ([[SnapshotLog.writeRollups]]): no re-read, no Spark job.
   *  3. Violations are derived from the written failing slice only and
   *     re-ingested through the error-schema gate
   *     (/root/reference/lib/eventgate.js:243-270).
@@ -71,39 +69,26 @@ final class MultiStreamValidationJob(
 
       // 1. the single full pass, routed by (status, stream) directory
       // columns (statusd/streamd duplicates keep the real columns in data —
-      // SnapshotLog.readPaths explains). Per-batch totals ride the same
-      // write via Observation, so no output re-read is needed for counts
-      // (per-(stream,partition) rollups are stream-value-dependent and
-      // can't be observed globally; they aggregate over the written table's
-      // three narrow columns below).
+      // SnapshotLog.readPaths explains). Per-(stream, partition) counts
+      // ride the same write via Observation, so no output re-read is
+      // needed for totals or rollups.
       val annFrame = res.annotated.drop("_pid")
-      val (nS, nI, nE) = phase("write_annotated") {
+      val counts = phase("write_annotated") {
         SnapshotLog.writeAnnotated(annFrame, annotatedPath, s"ms_$tag", Some(streamCol))
       }
+      val (nS, nI, nE) = SnapshotLog.totals(counts)
 
-      // 2. rollups per (stream, partition) from the written table — one
-      // columnar scan over (stream, partition_id, status) only.
-      val ann =
-        if (nS + nI + nE > 0) log.readPaths(spark, Seq(annotatedPath), Some(annFrame.schema))
-        else annFrame.limit(0)
-      val rollups = ann
-        .groupBy(col(streamCol).as("stream"), col("partition_id"))
-        .agg(
-          count(when(col("status") === Status.Success, 1)).as("n_success"),
-          count(when(col("status") === Status.Invalid, 1)).as("n_invalid"),
-          count(when(col("status") === Status.Error, 1)).as("n_error")
-        )
-        .select(lit(snapshotId).as("snapshot_id"), col("stream"), col("partition_id"),
-          col("n_success"), col("n_invalid"), col("n_error"))
-      phase("write_rollups") {
-        rollups.coalesce(1).write.mode("overwrite").parquet(rollPath)
+      // 2. rollups per (stream, partition): the observed counts
+      val rollupSchema = phase("write_rollups") {
+        log.writeRollups(rollPath, snapshotId, counts, withStream = true)
       }
 
       // 3. violations from the explicitly-listed failing directories only
       val failingDirs = SnapshotLog.failingDirs(annotatedPath, nI, nE)
       val failing =
-        if (failingDirs.isEmpty) ann.limit(0)
-        else log.readPaths(spark, failingDirs, Some(annFrame.schema))
+        if (failingDirs.nonEmpty) log.readPaths(spark, failingDirs, Some(annFrame.schema))
+        else if (nS > 0) log.readPaths(spark, Seq(annotatedPath), Some(annFrame.schema)).limit(0)
+        else annFrame.limit(0) // an all-empty batch wrote no files
       val vioSource = MultiStreamEngine.violationRows(failing, snapshotId, idField, streamCol)
       val kept = suppressViolations.fold(vioSource)(vioSource.filter)
       val rejectedObs = Observation(s"msgate_$tag")
@@ -152,7 +137,7 @@ final class MultiStreamValidationJob(
               "rollups" -> Seq(rollPath)
             ),
             // FILE schemas: readers plan from these, not parquet footers.
-            tableSchemas = SnapshotLog.tableSchemasFor(annFrame.schema, gated.schema, rollups.schema),
+            tableSchemas = SnapshotLog.tableSchemasFor(annFrame.schema, gated.schema, rollupSchema),
             metrics = Map(
               "n_success" -> (prevMetrics.getOrElse("n_success", 0L) + nS),
               "n_invalid" -> (prevMetrics.getOrElse("n_invalid", 0L) + nI),

@@ -8,7 +8,14 @@ import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, SparkToParquetSchemaConverter}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.StructType
 
 /** Snapshot manifest — the unit of atomic visibility. All outputs of a
   * commit (valid rows, violation rows, rollups, metrics, sketches) become
@@ -103,6 +110,47 @@ final class SnapshotLog(val root: String, conf: Configuration) extends Serializa
       s"tag '$tag' matches the reserved legacy stream-delta shape stream-<digits>; pick another tag")
     new Path(root, s"data/p-$tag/$table").toString
   }
+
+  /** Write a commit's rollup rows ([[SnapshotLog.rollupSchema]]) as ONE
+    * parquet file from the driver: metadata-sized data needs no Spark job
+    * and no Hadoop commit protocol, whose job setup/commit dominate a tiny
+    * Spark write. The directory is deleted first, so a retried batch
+    * replaces whatever a crashed attempt left; the file becomes visible only
+    * through the manifest commit that lists `path`, like every other output.
+    * Spark's row schema rides in the footer (as in Spark's own writer), so
+    * footer inference reads back exactly [[SnapshotLog.rollupSchema]].
+    */
+  def writeRollups(
+      path: String,
+      snapshotId: String,
+      counts: Seq[SnapshotLog.StatusCounts],
+      withStream: Boolean = false
+  ): StructType = {
+    val schema = SnapshotLog.rollupSchema(withStream)
+    val dir = new Path(path)
+    fs.delete(dir, true)
+    val parquetSchema = new SparkToParquetSchemaConverter(SQLConf.get).convert(schema)
+    val writer = ExampleParquetWriter
+      .builder(HadoopOutputFile.fromPath(new Path(dir, "part-00000.snappy.parquet"), conf))
+      .withConf(conf)
+      .withType(parquetSchema)
+      .withCompressionCodec(CompressionCodecName.SNAPPY)
+      .withExtraMetaData(java.util.Map.of(ParquetReadSupport.SPARK_METADATA_KEY, schema.json))
+      .build()
+    val groups = new SimpleGroupFactory(parquetSchema)
+    try counts.foreach { c =>
+      val g = groups.newGroup().append("snapshot_id", snapshotId)
+      if (withStream) c.stream.foreach(g.append("stream", _))
+      writer.write(g.append("partition_id", c.partitionId).append("n_success", c.nSuccess).append("n_invalid", c.nInvalid).append("n_error", c.nError))
+    }
+    finally writer.close()
+    schema
+  }
+
+  /** Delete the data directory of an uncommitted tag (an empty stream
+    * batch, whose write produced nothing a manifest should list).
+    */
+  def discardData(tag: String): Unit = { fs.delete(new Path(root, s"data/p-$tag"), true); () }
 
   private[table] def manifestPath(seq: Long) = new Path(snapDir, f"$seq%08d.json")
 
@@ -569,8 +617,13 @@ final class SnapshotLog(val root: String, conf: Configuration) extends Serializa
 }
 
 object SnapshotLog {
-  import org.apache.spark.sql.Observation
+  import scala.collection.mutable
+
+  import org.apache.spark.sql.{Encoder, Encoders, Observation, Row}
+  import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+  import org.apache.spark.sql.expressions.Aggregator
   import org.apache.spark.sql.functions._
+  import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField}
 
   private val manifestCache =
     scala.collection.concurrent.TrieMap.empty[(String, Long), Manifest]
@@ -600,36 +653,102 @@ object SnapshotLog {
     "rollups" -> rollups.json
   )
 
-  /** The single-pass produce shape shared by the batch and streaming gates:
-    * write `annotated` routed by statusd (and streamd when `streamCol` is
-    * set) — the `*d` duplicates exist only as directory names, the real
-    * columns stay in the data files (see [[SnapshotLog.readPaths]]) — while
-    * an attached Observation counts the batch's status totals during the
-    * SAME job. Returns (nSuccess, nInvalid, nError).
+  /** The one rollup FILE schema: per-(stream, partition_id) status counts
+    * of a commit. `withStream` adds the multi-stream `stream` key column.
+    * Every field is nullable, which is what Spark infers from any parquet
+    * footer, so the recorded schema and footer inference agree.
+    */
+  def rollupSchema(withStream: Boolean = false): StructType = StructType(
+    Seq(StructField("snapshot_id", StringType)) ++
+      (if (withStream) Seq(StructField("stream", StringType)) else Seq.empty) ++
+      Seq(
+        StructField("partition_id", IntegerType),
+        StructField("n_success", LongType),
+        StructField("n_invalid", LongType),
+        StructField("n_error", LongType)
+      )
+  )
+
+  /** Exact status counts of one (stream, partition_id) key of a written
+    * batch; `stream` is None when the writer routes by status only.
+    */
+  final case class StatusCounts(
+      stream: Option[String],
+      partitionId: Int,
+      nSuccess: Long,
+      nInvalid: Long,
+      nError: Long
+  )
+
+  /** Batch totals (nSuccess, nInvalid, nError) over every key. */
+  def totals(counts: Seq[StatusCounts]): (Long, Long, Long) =
+    counts.foldLeft((0L, 0L, 0L)) { case ((s, i, e), c) => (s + c.nSuccess, i + c.nInvalid, e + c.nError) }
+
+  private type Counts = mutable.HashMap[(String, Int), Array[Long]]
+  private type CountsOut = Seq[(String, Int, Long, Long, Long)]
+
+  /** Per-(stream, partition_id) status counts as ONE aggregate, so they ride
+    * an Observation instead of a groupBy re-read. The key set is data-
+    * dependent (stream values, `spark_partition_id()` partitions), which a
+    * fixed list of `count(when(..))` columns cannot cover. The buffer is a
+    * driver-sized map: one entry per key, not per row.
+    */
+  private final class StatusCountsAgg extends Aggregator[(String, Int, String), Counts, CountsOut] {
+    def zero: Counts = mutable.HashMap.empty
+    def reduce(b: Counts, in: (String, Int, String)): Counts = {
+      val c = b.getOrElseUpdate((in._1, in._2), new Array[Long](3))
+      in._3 match {
+        case graft.model.Status.Success => c(0) += 1
+        case graft.model.Status.Invalid => c(1) += 1
+        case graft.model.Status.Error   => c(2) += 1
+        case _                          => ()
+      }
+      b
+    }
+    def merge(x: Counts, y: Counts): Counts = {
+      y.foreach { case (k, v) =>
+        val c = x.getOrElseUpdate(k, new Array[Long](3))
+        c(0) += v(0); c(1) += v(1); c(2) += v(2)
+      }
+      x
+    }
+    def finish(b: Counts): CountsOut =
+      b.iterator.map { case ((s, p), c) => (s, p, c(0), c(1), c(2)) }.toSeq
+    def bufferEncoder: Encoder[Counts] = Encoders.javaSerialization[Counts]
+    def outputEncoder: Encoder[CountsOut] = ExpressionEncoder[CountsOut]()
+  }
+
+  /** The single-pass produce shape shared by the streaming gates and
+    * [[MultiStreamValidationJob]] ([[ValidationJob]] writes the same layout
+    * but observes its sketches and per-partition counts itself): write
+    * `annotated` routed by statusd (and streamd when `streamCol` is set) —
+    * the `*d` duplicates exist only as directory names, the real columns
+    * stay in the data files (see [[SnapshotLog.readPaths]]) — while an
+    * attached Observation counts success/invalid/error per (stream,
+    * partition_id) during the SAME job. Those counts are the commit's
+    * rollups, so nothing re-reads the written table for them. Sorted by
+    * (stream, partition_id); empty for a zero-row write.
     */
   def writeAnnotated(
       annotated: DataFrame,
       path: String,
       obsName: String,
       streamCol: Option[String] = None
-  ): (Long, Long, Long) = {
+  ): Seq[StatusCounts] = {
     val obs = Observation(obsName)
+    val stream = streamCol.fold(lit(null))(col).cast("string")
     val routed = streamCol.foldLeft(
       annotated
-        .observe(
-          obs,
-          count(when(col("status") === graft.model.Status.Success, 1)).as("n_s"),
-          count(when(col("status") === graft.model.Status.Invalid, 1)).as("n_i"),
-          count(when(col("status") === graft.model.Status.Error, 1)).as("n_e")
-        )
+        .observe(obs, udaf(new StatusCountsAgg).apply(stream, col("partition_id"), col("status")).as("counts"))
         .withColumn("statusd", col("status"))
     )((df, sc) => df.withColumn("streamd", col(sc)))
     routed.write
       .mode("overwrite")
       .partitionBy(Seq("statusd") ++ streamCol.map(_ => "streamd"): _*)
       .parquet(path)
-    val t = obs.get
-    (t("n_s").asInstanceOf[Long], t("n_i").asInstanceOf[Long], t("n_e").asInstanceOf[Long])
+    obs.get("counts").asInstanceOf[scala.collection.Seq[Row]].toSeq
+      .map(r => StatusCounts(Option(r.getString(0)), r.getInt(1), r.getLong(2), r.getLong(3), r.getLong(4)))
+      .sortBy(c => (c.stream, c.partitionId))
   }
 
   /** The statusd=success subtree of an annotated root (the valid table). */

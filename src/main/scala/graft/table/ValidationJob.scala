@@ -5,7 +5,6 @@ import java.util.Base64
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 import graft.constraint.{ConstraintSet, IsIn, MaxLength, MinLength, NonNull}
 import graft.engine.{EngineOptions, PixelChecks, ValidationEngine}
@@ -228,10 +227,7 @@ final class ValidationJob(
         // annotated write — a metadata-sized write, not another data scan.
         val snapshotId = opts.snapshotId
         val rollupRows = perPart.map { case (p, s, i, e) => Row(snapshotId, p, s, i, e) }
-        val rollupSchema = StructType(Seq(
-          StructField("snapshot_id", StringType), StructField("partition_id", IntegerType),
-          StructField("n_success", LongType), StructField("n_invalid", LongType), StructField("n_error", LongType)
-        ))
+        val rollupSchema = SnapshotLog.rollupSchema()
         phase("write_rollups") {
           import scala.jdk.CollectionConverters._
           spark.createDataFrame(rollupRows.asJava, rollupSchema)

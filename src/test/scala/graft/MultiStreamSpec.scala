@@ -364,9 +364,10 @@ class MultiStreamSpec extends SparkSpec {
   test("multi-stream job is single-pass: totals ride the annotated write, no output re-reads") {
     // Round-2 shape re-read the written annotated table AND the written
     // rollup parquet for counts (2 extra Spark jobs per batch). Now the
-    // batch totals come from an Observation attached to the annotated
-    // write, so one batch costs: write_annotated + rollup-agg/write +
-    // violations-gate/write (+ parquet-footer metadata jobs).
+    // per-(stream, partition) counts come from an Observation attached to
+    // the annotated write and the driver writes them as the rollup file,
+    // so one batch costs: write_annotated + violations-gate/write
+    // (+ parquet-footer metadata jobs).
     import graft.table.{MultiStreamValidationJob, SnapshotLog}
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val log = new SnapshotLog(
@@ -388,6 +389,50 @@ class MultiStreamSpec extends SparkSpec {
     assert(m.metrics("n_success") > 0 && m.metrics("n_invalid") > 0 && m.metrics("n_error") > 0)
     val n = jobs.get
     assert(n <= 6, s"one batch should cost <= 6 Spark jobs (3 data + metadata), saw $n")
+  }
+
+  test("multi-stream stream gate: rollups = (stream, partition) counts over the committed annotated table") {
+    import graft.streaming.StreamingValidation
+    import graft.table.{Maintenance, SnapshotLog}
+    val log = new SnapshotLog(
+      Files.createTempDirectory("graft_msroll").toString,
+      spark.sparkContext.hadoopConfiguration
+    )
+    // 4 input partitions, every one carrying invalid ("short" under strict)
+    // and error (unregistered stream) rows
+    val events = (0 until 8).map(p => batch.withColumn("doc_id", concat(lit(s"p${p}_"), col("doc_id"))))
+      .reduce(_.unionByName(_)).repartition(4)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).toSeq.sorted
+    for (id <- Seq(0L, 1L))
+      assert(StreamingValidation.processAndCommitMultiStream(log, registry, events, id, idField = "doc_id").isDefined)
+    val head = log.head.get
+
+    val roll = log.readTable(spark, head, "rollups")
+    val fromAnnotated = Seq(1L, 2L)
+      .map(seq => log.readTableChanges(spark, seq - 1, seq, "annotated").withColumn("snapshot_id", lit(s"batch-${seq - 1}")))
+      .reduce(_.unionByName(_))
+      .groupBy(col("snapshot_id"), col("stream"), col("partition_id"))
+      .agg(
+        count(when(col("status") === Status.Success, 1)).as("n_success"),
+        count(when(col("status") === Status.Invalid, 1)).as("n_invalid"),
+        count(when(col("status") === Status.Error, 1)).as("n_error"))
+    assert(rows(roll) == rows(fromAnnotated))
+    assert(roll.filter(col("n_invalid") > 0).select("partition_id").distinct().count() >= 3)
+    assert(roll.filter(col("n_error") > 0).select("stream").distinct().collect().map(_.getString(0)).toSeq ==
+      Seq("unregistered.stream"))
+
+    val recorded = log.tableSchema(head, "rollups").get
+    assert(recorded == SnapshotLog.rollupSchema(withStream = true))
+    assert(spark.read.parquet(log.tablePaths(head, "rollups"): _*).schema == recorded)
+
+    val before = rows(roll)
+    Maintenance.compact(spark, log, "rollups")
+    val compacted = log.head.get
+    assert(rows(log.readTable(spark, compacted, "rollups")) == before)
+    assert(rows(log.readTableAsOf(spark, head.sequence, "rollups")) == before)
+    for (p <- 0 until 4)
+      assert(rows(log.readTableForPartitions(spark, compacted, "rollups", Set(p))) ==
+        rows(roll.filter(col("partition_id") === p)))
   }
 
   test("stream extraction + sanitization parity (default-eventgate.js:132-152)") {

@@ -128,6 +128,121 @@ class StreamingSpec extends SparkSpec {
     assert(log.committedStreamBatches(log.head.get, id2) == Set(0L, bigId))
   }
 
+  /** A micro-batch over 4 input partitions with invalid rows planted in
+    * every partition (null captions).
+    */
+  private def plantedBatch(n: Int) =
+    SyntheticImages.images(spark, n, 4).toDF()
+      .withColumn("caption", when(pmod(hash(col("image_id")), lit(10)) === 0, lit(null: String)).otherwise(col("caption")))
+
+  private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
+
+  /** Rollup rows recomputed from the annotated rows committed by each of
+    * the log's commits (stream gates name snapshot `batch-<id>`).
+    */
+  private def statusCounts(log: graft.table.SnapshotLog, batchIds: Long*) =
+    batchIds.zip(1L to batchIds.size).map { case (id, seq) =>
+      log.readTableChanges(spark, seq - 1, seq, "annotated").withColumn("snapshot_id", lit(s"batch-$id"))
+    }.reduce(_.unionByName(_))
+      .groupBy(col("snapshot_id"), col("partition_id"))
+      .agg(
+        count(when(col("status") === "success", 1)).as("n_success"),
+        count(when(col("status") === "invalid", 1)).as("n_invalid"),
+        count(when(col("status") === "error", 1)).as("n_error"))
+
+  /** Runs `body` on another thread and fails the test instead of hanging
+    * if it does not return in time (e.g. an Observation that never fires).
+    */
+  private def withinTimeout[T](body: => T): T = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    Await.result(Future(body), 2.minutes)
+  }
+
+  test("stream gate rollups = counts over the committed annotated table; footer schema; compaction parity") {
+    import graft.table.{Maintenance, SnapshotLog}
+    val log = new SnapshotLog(
+      Files.createTempDirectory("graft_stream_roll").toString, spark.sparkContext.hadoopConfiguration)
+    val batch = plantedBatch(1200)
+    assert(batch.rdd.getNumPartitions >= 3)
+    assert(StreamingValidation.processAndCommit(log, ImageConstraints.v1, batch, 0L).isDefined)
+    assert(StreamingValidation.processAndCommit(log, ImageConstraints.v1, batch, 1L).isDefined)
+    val head = log.head.get
+
+    // the observed rollups equal a groupBy over what was actually committed
+    val roll = log.readTable(spark, head, "rollups")
+    assert(rows(roll) == rows(statusCounts(log, 0L, 1L)))
+    assert(roll.filter(col("n_invalid") > 0).select("partition_id").distinct().count() >= 3)
+    assert(roll.agg(sum("n_invalid")).collect()(0).getLong(0) == head.metrics("n_invalid"))
+
+    // the driver-written file's footer reads back as the recorded schema
+    val recorded = log.tableSchema(head, "rollups").get
+    assert(recorded == SnapshotLog.rollupSchema())
+    assert(spark.read.parquet(log.tablePaths(head, "rollups"): _*).schema == recorded)
+
+    // compaction of the rollups keeps every read identical
+    val before = rows(roll)
+    Maintenance.compact(spark, log, "rollups")
+    val compacted = log.head.get
+    assert(compacted.sequence == head.sequence + 1)
+    assert(rows(log.readTable(spark, compacted, "rollups")) == before)
+    assert(rows(log.readTableAsOf(spark, head.sequence, "rollups")) == before)
+    for (p <- 0 until 4)
+      assert(rows(log.readTableForPartitions(spark, compacted, "rollups", Set(p))) ==
+        rows(roll.filter(col("partition_id") === p)))
+  }
+
+  test("empty micro-batch commits nothing and leaves no data directory; the id still commits later") {
+    import graft.engine.ConstraintRegistry
+    import graft.constraint.{ConstraintSet, NonNull}
+    import graft.table.SnapshotLog
+    val log = new SnapshotLog(
+      Files.createTempDirectory("graft_stream_empty").toString, spark.sparkContext.hadoopConfiguration)
+    val imgs = plantedBatch(400)
+    def tagDir(l: SnapshotLog, ck: String, id: Long) = new java.io.File(new java.io.File(l.root), s"data/p-stream-$ck-$id")
+    assert(StreamingValidation.processAndCommit(log, ImageConstraints.v1, imgs, 0L, "single").isDefined)
+    val head0 = log.head.get
+
+    val empties = Seq(imgs.limit(0), imgs.filter(lit(false)),
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], imgs.schema))
+    for ((empty, i) <- empties.zipWithIndex) {
+      assert(withinTimeout(StreamingValidation.processAndCommit(log, ImageConstraints.v1, empty, 1L, "single")).isEmpty,
+        s"empty batch shape $i")
+      assert(log.head.get.snapshotId == head0.snapshotId)
+      assert(!tagDir(log, "single", 1L).exists(), s"empty batch shape $i left its data directory")
+    }
+    assert(StreamingValidation.processAndCommit(log, ImageConstraints.v1, imgs, 1L, "single").isDefined)
+    assert(log.committedStreamBatches(log.head.get, "single") == Set(0L, 1L))
+
+    // the multi-stream gate (its own log: its tables have other schemas)
+    val msLog = new SnapshotLog(
+      Files.createTempDirectory("graft_stream_empty_ms").toString, spark.sparkContext.hadoopConfiguration)
+    val reg = ConstraintRegistry(Seq(ConstraintSet("a/1", Seq.empty, Seq(NonNull("image_id")))), Map("alpha" -> "a/1"))
+    val events = imgs.withColumn("stream", lit("alpha"))
+    assert(withinTimeout(StreamingValidation.processAndCommitMultiStream(msLog, reg, events.limit(0), 7L)).isEmpty)
+    assert(msLog.head.isEmpty)
+    assert(!tagDir(msLog, "default", 7L).exists())
+    assert(StreamingValidation.processAndCommitMultiStream(msLog, reg, events, 7L).isDefined)
+    assert(msLog.committedStreamBatches(msLog.head.get, "default") == Set(7L))
+  }
+
+  test("retried batch replaces a crashed attempt's rollup file") {
+    import graft.table.SnapshotLog
+    val log = new SnapshotLog(
+      Files.createTempDirectory("graft_stream_retry").toString, spark.sparkContext.hadoopConfiguration)
+    // a crashed attempt of batch 0 left a file in its rollup directory
+    val rollDir = new java.io.File(log.dataDir("stream-default-0", "rollups").stripPrefix("file:"))
+    assert(rollDir.mkdirs())
+    val junk = new java.io.File(rollDir, "part-00000-crashed.snappy.parquet")
+    java.nio.file.Files.write(junk.toPath, "not parquet".getBytes("UTF-8"))
+
+    val m = StreamingValidation.processAndCommit(log, ImageConstraints.v1, plantedBatch(600), 0L).get
+    assert(!junk.exists())
+    assert(rows(log.readTable(spark, m, "rollups")) == rows(statusCounts(log, 0L)))
+  }
+
   test("multi-stream streaming gate: heterogeneous micro-batches, per-stream atomic fan-out") {
     import spark.implicits._
     import graft.constraint._
